@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from notion_spark.session import fanout
+
 
 def _hot_user_checked(
     df: DataFrame,
@@ -494,7 +496,6 @@ def covisitation_lift(
     order_by: Sequence[str],
     cap: int = 50,
     min_count: int = 2,
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """`covisitation_counts` plus the exact LIFT normalization —
     n_ab·N / (n_a·n_b), the observed-over-expected co-occurrence ratio
@@ -520,12 +521,8 @@ def covisitation_lift(
     )
     # r12 OPT (guide §2.4/§5): four consumers (item counts, user
     # total, both pair sides) — persisted, the JSON-extract + window
-    # + distinct lineage runs once instead of four times. r13 (ADVICE):
-    # a long-lived per-batch loop should pass
-    # persist_intermediates=False or clearCache between batches — the
-    # cached frame outlives the call.
-    if persist_intermediates:
-        capped = capped.persist()
+    # + distinct lineage runs once instead of four times.
+    capped = fanout(capped)
     item_users = capped.groupBy("__item").agg(F.count(F.lit(1)).alias("__nu"))
     total = capped.select(F.countDistinct("__u").alias("__nt"))
     a = capped.select("__u", F.col("__item").alias("item_a"))

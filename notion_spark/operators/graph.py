@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 SCALE = 10**12
+# rounds between lineage cuts in the fixed-iteration loops
+CHECKPOINT_EVERY = 5
 
 
 def pagerank_scaled(
@@ -36,7 +38,6 @@ def pagerank_scaled(
     damping_pct: int = 85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """(node, score) after ``iterations`` rounds of integer-scaled
     PageRank over the DISTINCT directed edge set. score is bigint in
@@ -78,7 +79,7 @@ def pagerank_scaled(
                 + F.expr(f"({damping_pct} * coalesce(inc, 0)) div 100")
             ).cast("bigint").alias("score"),
         )
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % CHECKPOINT_EVERY == 0:
             scores = scores.localCheckpoint(eager=False)
     return scores
 
@@ -88,7 +89,6 @@ def label_propagation(
     iterations: int = 3,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """(node, label) communities by DETERMINISTIC synchronous label
     propagation (Raghavan et al. 2007's LPA, made engine-exact): every
@@ -114,7 +114,7 @@ def label_propagation(
     the neighbor id, linear in |E|), one map-side-combined
     (node, label) count, and a per-node top-1 window over that node's
     distinct neighbor labels (frame bounded by degree). Lineage is cut
-    with localCheckpoint every ``checkpoint_every`` rounds, same as
+    with localCheckpoint every ``CHECKPOINT_EVERY`` rounds, same as
     `pagerank_scaled`."""
     from pyspark.sql.window import Window
 
@@ -140,7 +140,7 @@ def label_propagation(
             .filter(F.col("rn") == 1)
             .select("node", "label")
         )
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % CHECKPOINT_EVERY == 0:
             labels = labels.localCheckpoint(eager=False)
     return labels
 

@@ -44,18 +44,3 @@ def semi_members(df: DataFrame, other: DataFrame, key: str | list[str]) -> DataF
     generate_reports.py:437)."""
     keys = [key] if isinstance(key, str) else list(key)
     return df.join(other.select(*keys).distinct(), on=keys, how="left_semi")
-
-
-# ---------------------------------------------------------------- J2
-def resolve_fk(
-    df: DataFrame,
-    fk_col: str,
-    dim: DataFrame,
-    dim_key: str,
-    dim_val: str,
-    out_col: str,
-) -> DataFrame:
-    """Bulk FK resolution replacing the reference's per-row memoized point
-    lookups (fetch_pages.py:38-64, 374-382): one broadcast join instead of
-    N API calls / dict probes."""
-    return broadcast_lookup(df, dim, fk_col, dim_key, dim_val, out_col)

@@ -6,6 +6,7 @@ Split from parity.py (r11); oracle text moved byte-identical.
 from notion_spark.parity._base import *  # noqa: F401,F403
 from notion_spark.parity.q_pipeline import _COS, _COS_AB, _TOKS
 from notion_spark.parity.q_curation import _doc_assets
+from notion_spark.session import fanout
 
 # =====================================================================
 # Behavioral analytics + bounded-memory sketches (engine extensions)
@@ -3491,7 +3492,6 @@ def curation_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         mix_group_col="source",
         mix_budget=100,
         mix_alpha=0.5,
-        persist_intermediate=False,
     )
     return out.select("doc_id", "source", "split")
 
@@ -3727,11 +3727,8 @@ def curation_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole lineage executed twice per run. Both consumers are terminal
     # (an aggregate and a broadcast-probe join — no iterative plan
     # downstream), so the persist cannot block AQE ReusedExchange the
-    # way the covisitation_counts persist did. clearCache()/unpersist
-    # between batches in a long-running loop.
-    fam = (
-        TA.bigram_familiarity(d).join(d.select("doc_id", "lang"), "doc_id").persist()
-    )
+    # way the covisitation_counts persist did.
+    fam = fanout(TA.bigram_familiarity(d).join(d.select("doc_id", "lang"), "doc_id"))
     buckets = grouped_score_buckets(fam, "familiarity_micro", "lang", n_bins=3)
     bounds = buckets.groupBy("lang").agg(
         F.min(F.when(F.col("bucket") == 0, F.col("familiarity_micro"))).alias("__lo0"),

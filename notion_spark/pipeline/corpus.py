@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from notion_spark.pipeline import curation as CU
 from notion_spark.pipeline import dedup as DD
+from notion_spark.session import fanout
 
 
 @dataclass
@@ -79,7 +80,6 @@ def curate_corpus(
     max_bucket: int = 1000,
     quality_kwargs: dict | None = None,
     collect_report: bool = False,
-    persist_intermediate: bool = True,
     keep_best_order: list[Column] | None = None,
     embeddings: DataFrame | None = None,
     semantic_benchmark: DataFrame | None = None,
@@ -99,12 +99,9 @@ def curate_corpus(
     leave it off in pipelines that only need the result.
     ``quality_kwargs`` forwards to `curation.quality_rules` (e.g.
     min_words for short-document corpora).
-    ``persist_intermediate`` caches the exact-dedup output, the one
-    multi-consumer frame in the flow (see module docstring); the cache
-    populates lazily on the caller's first action. Pass False in
-    single-pass pipelines that go straight to one write, or unpersist
-    via spark.catalog.clearCache() between corpora in a long-running
-    driver.
+    The exact-dedup output, the one multi-consumer frame in the flow
+    (see module docstring), is persisted with `session.fanout`; the
+    cache populates lazily on the caller's first action.
 
     Optional stages (each enabled by passing its inputs):
 
@@ -156,9 +153,7 @@ def curate_corpus(
     if report is not None:
         report.after_quality = kept.count()
 
-    kept = DD.drop_exact_dups(kept, text_col, id_col)
-    if persist_intermediate:
-        kept = kept.persist()
+    kept = fanout(DD.drop_exact_dups(kept, text_col, id_col))
     if report is not None:
         report.after_exact_dedup = kept.count()
 

@@ -34,18 +34,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from notion_spark.session import fanout
+
 
 # ------------------------------------------------------------ shingling
-
-def _maybe_persist(df: DataFrame, flag: bool) -> DataFrame:
-    """Per-invocation lazy persist with an opt-out (the
-    persist_candidates convention, extended r13 per ADVICE r12): the
-    fan-out frames these operators cache are invaluable inside one
-    call but outlive it — a long-lived session looping over batches
-    should pass persist_intermediates=False (or clearCache between
-    batches) so executor storage does not accrete."""
-    return df.persist() if flag else df
-
 
 def _raw_shingles(tokens: Column, n: int = 3) -> Column:
     """n-gram shingles (space-joined, duplicates kept) over an ALREADY
@@ -350,7 +342,6 @@ def jaccard_pairs_prefix(
     threshold: float = 0.8,
     block_key: Column | None = None,
     max_token_bucket: int = 100_000,
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """BLOCKING-FREE exact n-gram Jaccard near-dup pairs via prefix
     filtering (AllPairs, Bayardo/Ma/Srikant WWW 2007; the PPJoin
@@ -404,7 +395,7 @@ def jaccard_pairs_prefix(
     # (via toks) AND both verify sides — persisted, the shingle explode
     # + collect_set shuffle runs once instead of ~4x (the
     # levenshtein_pairs_qgram treatment; consumers are terminal).
-    docs = _maybe_persist(docs.withColumn("sz", F.size("sh")), persist_intermediates)
+    docs = fanout(docs.withColumn("sz", F.size("sh")))
     toks = docs.select("id", *blk, "sz", F.explode("sh").alias("h"))
     freq = toks.groupBy("h").agg(F.count(F.lit(1)).alias("__f"))
     wdoc = Window.partitionBy("id").orderBy(F.asc("__f"), F.asc("h"))
@@ -424,9 +415,7 @@ def jaccard_pairs_prefix(
     wtok = Window.partitionBy("h", *blk)
     # r12 OPT: bucket-size window folded into the persisted prefix frame
     # (one compute; both candidate sides read the cache)
-    pref = _maybe_persist(
-        pref.withColumn("__t_n", F.count(F.lit(1)).over(wtok)), persist_intermediates
-    )
+    pref = fanout(pref.withColumn("__t_n", F.count(F.lit(1)).over(wtok)))
     guard = guarded(
         F.col("__t_n") > F.lit(max_token_bucket),
         f"jaccard_pairs_prefix: prefix shingle bucket exceeds {max_token_bucket}"
@@ -697,7 +686,6 @@ def levenshtein_pairs_qgram(
     max_gram_bucket: int = 100_000,
     block_key: Column | None = None,
     max_candidates: int | None = 200_000_000,
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """BLOCKING-FREE exact edit-distance near-dup pairs via q-gram
     prefix filtering (Ed-Join, Xiao/Wang/Lin VLDB 2008): no blocking
@@ -830,14 +818,9 @@ def levenshtein_pairs_qgram(
     # consumer (the sf0.1 profile measured the gram explode 4x and the
     # prefix window 4x, ~7.5 s of serial single-task recomputation in a
     # 12.6 s query). Lazy persists populate on the caller's first
-    # action and every later subtree reads the cache; clearCache() or
-    # unpersist between batches in a long-running loop (the
-    # cross_minhash_pairs convention).
-    docs = _maybe_persist(
-        members.filter(F.col("id") == F.col("rep")).drop("rep", "__grp_n"),
-        persist_intermediates,
-    )
-    mem = _maybe_persist(members.select("id", "rep", "__grp_n"), persist_intermediates)
+    # action and every later subtree reads the cache.
+    docs = fanout(members.filter(F.col("id") == F.col("rep")).drop("rep", "__grp_n"))
+    mem = fanout(members.select("id", "rep", "__grp_n"))
     band_w = max(max_distance, 1)
     banded_docs = docs.withColumn(
         "band", F.call_function("div", F.col("len"), F.lit(band_w))
@@ -883,7 +866,7 @@ def levenshtein_pairs_qgram(
         (F.expr("locate(gram, txt)") - F.lit(1)).alias("__pos"),
     )
     # r12 OPT: feeds freq, the prefix join AND ndist — one explode
-    grams = _maybe_persist(grams, persist_intermediates)
+    grams = fanout(grams)
     freq = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("__f"))
     wdoc = Window.partitionBy("id").orderBy(F.asc("__f"), F.asc("gram"))
     pre_cap = (
@@ -924,9 +907,7 @@ def levenshtein_pairs_qgram(
     # window runs once, not once per join side; pref then feeds the a/b
     # candidate sides and the mass-guard sizes from the cache (3 reads,
     # 1 compute of the join+prefix-window lineage).
-    pref = _maybe_persist(
-        pref.withColumn("__g_n", F.count(F.lit(1)).over(wg)), persist_intermediates
-    )
+    pref = fanout(pref.withColumn("__g_n", F.count(F.lit(1)).over(wg)))
     guard = guarded(
         F.col("__g_n") > F.lit(max_gram_bucket),
         f"levenshtein_pairs_qgram: prefix gram bucket exceeds {max_gram_bucket}"
@@ -1425,7 +1406,6 @@ def minhash_dedup_pairs(
     verify_scope: str = "all",
     max_bucket: int | None = 1000,
     guard_impl: str = "agg",
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates -> exact Jaccard verify over
     shingle-hash sets. Output matches `jaccard_pairs` (id_a, id_b,
@@ -1449,15 +1429,13 @@ def minhash_dedup_pairs(
     signature aggregate AND the verify-set aggregate from that one
     cache — the explode runs once and the cached rows are 16 bytes+id,
     not the wide combined row the dead end cached."""
-    ex = _maybe_persist(
-        shingle_hashes(df, text_col, id_col, ngram), persist_intermediates
-    )
+    ex = fanout(shingle_hashes(df, text_col, id_col, ngram))
     cands = minhash_lsh_candidates(
         df, text_col, id_col, num_hashes, bands, ngram, max_bucket, guard_impl,
         hashes=ex,
     )
     if verify_scope == "candidates":
-        cands = cands.persist()
+        cands = fanout(cands)
         cands.count()
         cand_ids = (
             cands.select(F.col("id_a").alias("id"))
@@ -1655,7 +1633,6 @@ def cross_minhash_pairs(
     bands: int = 16,
     ngram: int = 3,
     max_bucket: int = 1000,
-    persist_candidates: bool = True,
 ) -> DataFrame:
     """Incremental near-dedup: (id_new, id_corpus, jaccard) pairs between
     a new batch and the existing corpus — the daily-increment shape at
@@ -1687,23 +1664,16 @@ def cross_minhash_pairs(
     # signature aggregate and the candidate-scoped verify-set aggregate
     # (see minhash_dedup_pairs — measured 6.3 s -> 3.9 s on the
     # single-corpus sibling)
-    ex_n = _maybe_persist(
-        shingle_hashes(new, text_col, id_col, ngram), persist_candidates
-    )
-    ex_c = _maybe_persist(
-        shingle_hashes(corpus, text_col, id_col, ngram), persist_candidates
-    )
+    ex_n = fanout(shingle_hashes(new, text_col, id_col, ngram))
+    ex_c = fanout(shingle_hashes(corpus, text_col, id_col, ngram))
     cands = cross_minhash_candidates(
         new, corpus, text_col, id_col, num_hashes, bands, ngram, max_bucket,
         hashes_new=ex_n, hashes_corpus=ex_c,
     )
-    if persist_candidates:
-        # lazy persist: the frame feeds three consumers below, and the
-        # cache populates on the caller's FIRST action (no job runs at
-        # plan-construction time). In a long-running per-batch loop,
-        # unpersist between batches (spark.catalog.clearCache() or pass
-        # persist_candidates=False) — a persisted frame outlives the call.
-        cands = cands.persist()
+    # lazy: the frame feeds three consumers below, and the cache
+    # populates on the caller's FIRST action (no job runs at
+    # plan-construction time)
+    cands = fanout(cands)
     sets_n = shingle_hash_sets(
         new, text_col, id_col, ngram,
         hashes=ex_n.join(
@@ -2524,7 +2494,6 @@ def containment_pairs(
     bands: int = 16,
     ngram: int = 3,
     max_bucket: int | None = 1000,
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """ASYMMETRIC shingle containment pairs — "is A mostly inside B":
     for candidate pairs, the exact fraction of each side's distinct
@@ -2562,9 +2531,7 @@ def containment_pairs(
 
     # r12 OPT: one persisted exploded hash pass shared by the signature
     # and set aggregates (see minhash_dedup_pairs)
-    ex = _maybe_persist(
-        shingle_hashes(df, text_col, id_col, ngram), persist_intermediates
-    )
+    ex = fanout(shingle_hashes(df, text_col, id_col, ngram))
     cands = minhash_lsh_candidates(
         df, text_col, id_col, num_hashes, bands, ngram, max_bucket, hashes=ex
     )

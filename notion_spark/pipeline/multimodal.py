@@ -170,22 +170,6 @@ def sample_frames(assets: DataFrame, every_n: int = 10, max_frames: int = 8) -> 
     )
 
 
-def resize_stub(assets: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: passes payloads through mapInPandas batches with a
-    deterministic 'resized' marker in meta (real resize = decoder work).
-    Schema/partition behavior identical to a real resize."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["meta"] = [
-                {**(m or {}), "resized": f"{width}x{height}"} for m in pdf["meta"]
-            ]
-            yield pdf
-
-    return assets.mapInPandas(batches, schema=assets.schema)
-
-
 def phash_signatures(
     assets: DataFrame,
     payload_col: str = "payload",

@@ -101,21 +101,8 @@ def run_pipeline(
     chart_paths: list[str] = []
     chart_bufs: list[tuple[bytes, int, int]] = []
     if export:
-        from notion_spark.sinks.charts import charts_available
-
-        if charts_available():  # pragma: no cover - matplotlib absent here
-            chart_paths = render_charts(sections, cache_dir)
-            canvases = render_chart_canvases(sections)
-        else:
-            canvases = render_chart_canvases(sections)
-            names = [
-                "task_status_distribution.png", "tasks_by_priority.png", "velocity.png"
-            ]
-            for canvas, name in zip(canvases, names):
-                p = os.path.join(cache_dir, name)
-                with open(p, "wb") as f:
-                    f.write(canvas.png_bytes())
-                chart_paths.append(p)
+        canvases = render_chart_canvases(sections)
+        chart_paths = render_charts(canvases, cache_dir)
         chart_bufs = [(c.rgb_bytes(), c.w, c.h) for c in canvases]
     reported = normalize_for_reports(merged).cache()
     payloads = {}

@@ -10,8 +10,11 @@ pandas-UDF paths).
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Tuned for the local[32] test harness; on a real cluster these come from
 # spark-submit / cluster conf and our settings only fill gaps (we use
@@ -79,3 +82,58 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+class _Scopes(threading.local):
+    """Per-thread stack of open cache scopes, each a list of the frames
+    fanned out inside it."""
+
+    def __init__(self) -> None:
+        self.stack: list[list[DataFrame]] = []
+
+
+_scopes = _Scopes()
+
+
+def fanout(df: DataFrame) -> DataFrame:
+    """Persist ``df`` — a frame its plan reads more than once — and
+    register it with the innermost open `cache_scope` on this thread.
+    Outside any scope this is exactly ``df.persist()``."""
+    df = df.persist()
+    if _scopes.stack:
+        _scopes.stack[-1].append(df)
+    return df
+
+
+@contextmanager
+def cache_scope(spark: SparkSession) -> Iterator[None]:
+    """The one owner of the cached storage that operators leave behind.
+
+    Operators persist the frames they fan out through `fanout`, and the
+    iterative ones cut lineage with ``localCheckpoint``; both outlive the
+    call that made them. On exit, including on an exception, the scope
+    unpersists the frames registered with it, then every RDD persisted
+    since entry, which also releases the checkpoints. A loop over batches
+    therefore does not accrete executor storage, and no cache entry is
+    substituted into a later, unrelated plan.
+
+    Contract: consume a result inside the scope that built it. A result
+    built on a local checkpoint fails loudly after exit, because its
+    blocks are gone; one built on a persisted frame silently recomputes
+    its lineage. Scopes nest: an inner scope releases only its own frames
+    and the RDDs persisted after it opened. The RDD snapshot is
+    context-wide, so another thread's persists made meanwhile are
+    released too."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    frames: list[DataFrame] = []
+    _scopes.stack.append(frames)
+    try:
+        yield
+    finally:
+        _scopes.stack.pop()
+        for df in frames:
+            df.unpersist()
+        for rdd_id, rdd in jsc.getPersistentRDDs().items():
+            if rdd_id not in before:
+                rdd.unpersist(False)

@@ -2,29 +2,19 @@
 velocity bars via matplotlib/seaborn).
 
 Aggregation happens in Spark; only the tiny aggregate result crosses to
-the driver. Rendering is dependency-free: matplotlib is used when
-present, otherwise the vendored `minipng` rasterizer produces real,
-deterministic PNGs — so `render_charts` always writes files, and
-`render_chart_canvases` feeds raw RGB buffers straight into the PDF
-sink's image XObjects.
+the driver. Rendering is dependency-free: the vendored `minipng`
+rasterizer draws each chart once (`render_chart_canvases`); the same
+canvases become the PNG files (`render_charts`) and the raw RGB buffers
+of the PDF sink's image XObjects.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 
 from notion_spark.sinks import minipng
-
-
-def charts_available() -> bool:
-    """True when matplotlib can render; the minipng fallback makes
-    rendering itself unconditional."""
-    try:
-        import matplotlib  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def chart_data(sections: dict[str, DataFrame]) -> dict[str, list[tuple]]:
@@ -51,41 +41,14 @@ def render_chart_canvases(sections: dict[str, DataFrame]) -> list[minipng.Canvas
     ]
 
 
-def render_charts(sections: dict[str, DataFrame], out_dir: str) -> list[str]:
-    """Render PNG charts like the reference (status pie, velocity bars).
-    Always writes files: matplotlib when present, minipng otherwise."""
-    if not charts_available():
-        names = ["task_status_distribution.png", "tasks_by_priority.png", "velocity.png"]
-        paths = []
-        for canvas, name in zip(render_chart_canvases(sections), names):
-            p = f"{out_dir}/{name}"
-            with open(p, "wb") as f:
-                f.write(canvas.png_bytes())
-            paths.append(p)
-        return paths
-    import matplotlib
-
-    matplotlib.use("Agg")
-    import matplotlib.pyplot as plt
-
-    data = chart_data(sections)
+def render_charts(canvases: list[minipng.Canvas], out_dir: str) -> list[str]:
+    """Write the canvases of `render_chart_canvases` as the reference's
+    PNG files (status pie, priority bars, velocity); returns the paths."""
+    names = ["task_status_distribution.png", "tasks_by_priority.png", "velocity.png"]
     paths = []
-
-    fig, ax = plt.subplots()
-    labels, counts = zip(*data["status_pie"]) if data["status_pie"] else ((), ())
-    ax.pie(counts, labels=labels, autopct="%1.1f%%")
-    p = f"{out_dir}/task_status_distribution.png"
-    fig.savefig(p)
-    plt.close(fig)
-    paths.append(p)
-
-    fig, ax = plt.subplots()
-    if data["velocity"]:
-        weeks, counts = zip(*data["velocity"])
-        ax.bar([str(w) for w in weeks], counts)
-        ax.set_xticklabels([str(w) for w in weeks], rotation=45, ha="right")
-    p = f"{out_dir}/velocity.png"
-    fig.savefig(p)
-    plt.close(fig)
-    paths.append(p)
+    for canvas, name in zip(canvases, names):
+        p = os.path.join(out_dir, name)
+        with open(p, "wb") as f:
+            f.write(canvas.png_bytes())
+        paths.append(p)
     return paths

@@ -26,12 +26,6 @@ from notion_spark.functions.text import truncate_lines
 from notion_spark.sinks.minipdf import MiniPDF
 
 
-def pdf_available() -> bool:
-    """Always true: rendering no longer depends on fpdf — minipdf is the
-    vendored writer. Kept for API compatibility."""
-    return True
-
-
 def safe_encode(text: str) -> str:
     """X6 (generate_reports.py:126-132): clamp to latin-1 with '?'
     replacement — the PDF text-stream encoding contract."""

@@ -85,8 +85,3 @@ def render_analysis(
         w(_table(sections["uncategorized"], ["nid", "name", "status"]))
         w("\n")
     return out.getvalue()
-
-
-def write_analysis(path: str, sections: dict[str, DataFrame], now: datetime, cfg: EngineConfig) -> None:
-    with open(path, "w") as f:
-        f.write(render_analysis(sections, now, cfg))

@@ -51,12 +51,3 @@ def attachment_previews(attachments: DataFrame, cfg: EngineConfig) -> DataFrame:
         readable.alias("is_readable"),
         F.when(readable, capped).alias("preview"),
     )
-
-
-def attachments_for_report(
-    tasks: DataFrame, attachments: DataFrame, cfg: EngineConfig
-) -> DataFrame:
-    """Join previews onto report rows by nid (replacing the reference's
-    per-row open()+read loop with one join)."""
-    previews = attachment_previews(attachments, cfg)
-    return tasks.join(previews, "nid", "left")

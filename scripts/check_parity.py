@@ -22,6 +22,10 @@ dtype-sensitively. Empirically (r4 probe):
 - floats are hashed at full precision (repr round-trips doubles
   bit-exactly); the r3 mirror's 9-digit rounding is gone.
 
+Each query is built and collected inside `session.cache_scope`; a query
+that still holds a persistent RDD or a cache entry after its scope
+closes counts as a failure (``err="leaked storage"``).
+
 Usage: python scripts/check_parity.py [--json OUT.json] [sf_dir] [query ...]
 
 With --json, every row is also written to OUT.json in the driver's
@@ -119,14 +123,14 @@ def main() -> int:
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     import __spark_entry__ as entrymod
-    from notion_spark.session import get_spark
-
-    from notion_spark.session import BENCH_DRIVER_MEMORY_CONF
+    from notion_spark.session import BENCH_DRIVER_MEMORY_CONF, cache_scope, get_spark
 
     spark = get_spark(
         app_name="parity-check",
         extra_conf={"spark.ui.enabled": "false", **BENCH_DRIVER_MEMORY_CONF},
     )
+    persistent_rdds = spark.sparkContext._jsc.getPersistentRDDs
+    cache = spark._jsparkSession.sharedState().cacheManager()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
@@ -141,27 +145,28 @@ def main() -> int:
         t0 = time.time()
         spark_secs = None
         try:
-            sdf = fn(spark, sf_dir)
-            if name in oracles:
-                bad = [
-                    f.name
-                    for f in sdf.schema.fields
-                    if isinstance(f.dataType, (ArrayType, MapType, StructType))
-                ]
-                if bad:
-                    print(
-                        f"FAIL  {name}: non-atomic output columns {bad} — the driver's"
-                        " canonicalizer cannot sort/hash them (serialize to string)"
-                    )
-                    rows[name] = {
-                        "rows_match": None, "schema_match": False, "hash_match": None,
-                        "spark_rows": None, "oracle_rows": None,
-                        "err": f"non-atomic output columns {bad}",
-                    }
-                    n_fail += 1
-                    failures.append(name)
-                    continue
-            spdf = sdf.toPandas()
+            with cache_scope(spark):
+                sdf = fn(spark, sf_dir)
+                if name in oracles:
+                    bad = [
+                        f.name
+                        for f in sdf.schema.fields
+                        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+                    ]
+                    if bad:
+                        print(
+                            f"FAIL  {name}: non-atomic output columns {bad} — the driver's"
+                            " canonicalizer cannot sort/hash them (serialize to string)"
+                        )
+                        rows[name] = {
+                            "rows_match": None, "schema_match": False, "hash_match": None,
+                            "spark_rows": None, "oracle_rows": None,
+                            "err": f"non-atomic output columns {bad}",
+                        }
+                        n_fail += 1
+                        failures.append(name)
+                        continue
+                spdf = sdf.toPandas()
             spark_secs = round(time.time() - t0, 3)
         except Exception as e:
             print(f"FAIL  {name}: spark error")
@@ -170,6 +175,17 @@ def main() -> int:
                 "rows_match": None, "schema_match": None, "hash_match": None,
                 "spark_rows": None, "oracle_rows": None,
                 "err": f"spark: {type(e).__name__}: {e}"[:500],
+            }
+            n_fail += 1
+            failures.append(name)
+            continue
+        if persistent_rdds().size() or not cache.isEmpty():
+            print(f"FAIL  {name}: leaked storage")
+            spark.catalog.clearCache()
+            rows[name] = {
+                "rows_match": None, "schema_match": None, "hash_match": None,
+                "spark_rows": len(spdf), "oracle_rows": None,
+                "err": "leaked storage",
             }
             n_fail += 1
             failures.append(name)

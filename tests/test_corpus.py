@@ -77,18 +77,9 @@ def test_curate_corpus_persists_multi_consumer_frame(spark):
     the cache so the input scan + quality join + exact-dedup shuffle run
     once, not once per consumer (the r2 edge-cache lesson)."""
     df = _corpus(spark)
-    # opt-out stays lazy end to end (checked FIRST: Spark's cache
-    # manager substitutes cached fragments into any matching later plan)
-    out_lazy, _ = curate_corpus(
-        df, near_dup_threshold=0.5, quality_kwargs={"min_words": 10},
-        persist_intermediate=False,
-    )
-    lazy_plan = out_lazy._jdf.queryExecution().optimizedPlan().toString()
-    assert "InMemoryRelation" not in lazy_plan
     out, _ = curate_corpus(df, near_dup_threshold=0.5, quality_kwargs={"min_words": 10})
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" in plan
-    spark.catalog.clearCache()  # drop the preset's pinned frame for later tests
 
 
 def test_curate_corpus_no_benchmark_no_report(spark):
@@ -146,7 +137,7 @@ def test_curate_corpus_optional_stages_match_manual(spark):
     order = [F.desc("score"), F.asc("doc_id")]
     out, report = curate_corpus(
         df, near_dup_threshold=0.5, quality_kwargs={"min_words": 10},
-        collect_report=True, persist_intermediate=False,
+        collect_report=True,
         keep_best_order=order,
         embeddings=embs, semantic_benchmark=sb, semantic_threshold=0.95,
         token_budget=110, token_budget_score_col="score",

@@ -839,23 +839,7 @@ def test_r13_iterative_consumers_no_inmemory_reuse_pinned(spark, sf_dir):
     persist inside covisitation_counts). This test fails if anyone
     re-adds a persist upstream of the iterative consumers — the static
     plan must be cache-free, and the executed adaptive plan must show
-    the exchange reuse actually firing.
-
-    Session isolation (r13 close): the pin is about the operators' OWN
-    lineage, so start from an empty CacheManager. In a shared session,
-    any earlier covisitation_lift invocation (e.g. the plan-shape test
-    at the top of this file — persist() registers the capped frame
-    even without executing it) leaves a cache entry that Spark
-    substitutes into kcore's plan-identical capped subplan, turning
-    this test into an ordering lottery. That substitution is also the
-    documented real-world hazard of the per-invocation persists
-    (ADVICE r12 / the persist_intermediates opt-outs): a long-lived
-    session that runs covisitation_lift before graph_kcore re-creates
-    the measured r12 regression through the CacheManager even though
-    covisitation_counts itself never persists. The bench is immune by
-    construction (fresh-JVM chunks of 25: lift is index 70/chunk 2,
-    kcore 85/chunk 3)."""
-    spark.catalog.clearCache()
+    the exchange reuse actually firing."""
     for q in ("graph_kcore", "graph_label_propagation"):
         df = parity.QUERIES[q](spark, sf_dir)
         static = plan_of(df)

@@ -230,11 +230,11 @@ def test_render_charts_writes_pngs_without_matplotlib(tmp_path, spark):
     from notion_spark.config import EngineConfig
     from notion_spark.normalize import normalize_for_analysis
     from notion_spark.queries.analysis import run_all
-    from notion_spark.sinks.charts import render_charts
+    from notion_spark.sinks.charts import render_chart_canvases, render_charts
     from tests.fixtures import FIXED_NOW, make_tasks
 
     frames = run_all(normalize_for_analysis(make_tasks(spark)), FIXED_NOW, EngineConfig())
-    paths = render_charts(frames, str(tmp_path))
+    paths = render_charts(render_chart_canvases(frames), str(tmp_path))
     assert len(paths) == 3
     for p in paths:
         assert open(p, "rb").read().startswith(b"\x89PNG")

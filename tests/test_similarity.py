@@ -483,6 +483,7 @@ class TestProductQuantization:
         big = train_pq_codebooks(emb, n_subspaces=8, n_centroids=32, iterations=3)
         r_small = recall_at_k(exact, pq_adc_topk(emb, q, small, k=10))
         r_big = recall_at_k(exact, pq_adc_topk(emb, q, big, k=10))
+        exact.unpersist()
         assert r_small >= 0.25, r_small
         assert r_big > r_small, (r_small, r_big)
 

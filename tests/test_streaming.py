@@ -287,4 +287,5 @@ def test_stream_classify_foreachbatch_matches_batch(spark, tmp_path):
         (r.doc_id, r.label)
         for r in classify(train, weights, n_buckets=128).collect()
     }
+    weights.unpersist()
     assert got == want == {(1, "A"), (2, "A"), (3, "Z"), (4, "Z")}
